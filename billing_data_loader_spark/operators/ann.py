@@ -1,12 +1,14 @@
 """Similarity-search operators over the embedding column (north-star
 mandate): exact near-dup pairs, and an IVF-style ANN index as the scale path.
 
-Vector math stays JVM-side (zip_with/aggregate fold — verified bit-identical
-to DuckDB's list_dot_product). The brute-force operators are the exact
-baselines; ``ext_ann_ivf`` is the 100 TB shape: partition the corpus into
-coarse cells around pivot vectors (one broadcast + one shuffle), then search
-only the query's nearest cells. Recall vs the exact top-k is asserted in
-tests/test_ann.py.
+Per-vector model scans (nearest pivot, codebook distances, LSH signature
+bits) fold in numpy inside ``mapInPandas`` — one pass per Arrow batch
+through :func:`_model_scan`, bit-identical per row to DuckDB's
+list_dot_product fold; rounding and the rounded argmin stay in the JVM.
+The brute-force operators are the exact baselines; ``ext_ann_ivf`` is the
+100 TB shape: partition the corpus into coarse cells around pivot vectors
+(one broadcast + one shuffle), then search only the query's nearest cells.
+Recall vs the exact top-k is asserted in tests/test_ann.py.
 """
 
 from __future__ import annotations
@@ -102,17 +104,72 @@ def _np_fold_cos_mat(x_mat, p_mat):
     return dot / (np.sqrt(nx)[:, None] * np.sqrt(npp)[None, :])
 
 
-def _collect_model(df, order_col: str, vec_col: str):
-    """Collect a model-sized (id, vector) frame to the driver, sorted by id:
-    returns (ids list, (k, d) float64 matrix). Model-sized means bounded by
-    k (pivot/codebook/centroid count), never by the corpus — the §3.2
-    driver-action budget."""
+def _collect_vectors(spark, sf_dir: str, lo: int, hi: int, required=()):
+    """Model-sized driver collect of embedding rows lo..hi (query, pivots,
+    codebook, seeds — the §3.2 driver-action budget): {vec_id: float64
+    vector}. Reads the RAW scan so the id filter pushes down to parquet —
+    never a widened frame, whose repartition would shuffle the corpus to
+    fetch a few rows. A missing `required` id raises a ValueError naming
+    it (a missing query row would otherwise surface as a bare KeyError,
+    a missing codebook row as silently shifted codes)."""
     import numpy as np
 
-    rows = df.orderBy(order_col).collect()
-    ids = [r[order_col] for r in rows]
-    mat = np.array([r[vec_col] for r in rows], dtype="float64")
-    return ids, mat
+    rows = {
+        int(r["vec_id"]): np.array(r["v"], dtype="float64")
+        for r in load(spark, sf_dir, "embeddings")
+        .select("vec_id", _as_double("embedding").alias("v"))
+        .filter(F.col("vec_id").between(lo, hi))
+        .collect()
+    }
+    missing = sorted(set(required) - set(rows))
+    if missing:
+        raise ValueError(
+            f"embeddings has no row for required model vec_id {missing}"
+        )
+    return rows
+
+
+def _stack_rows(rows: dict, lo: int, hi: int):
+    """(id-ascending int64 ids, (k, d) matrix) of the collected rows whose
+    id lies in lo..hi."""
+    import numpy as np
+
+    ids = sorted(k for k in rows if lo <= k <= hi)
+    return np.array(ids, dtype="int64"), np.stack([rows[k] for k in ids])
+
+
+def _centroid_matrix(rows, cid_col: str, val_col: str):
+    """(cid, idx, value) rows of a model-sized centroid aggregate ->
+    (ascending cids, (k, d) float64 matrix, each row in idx order)."""
+    import numpy as np
+
+    by_cid: dict[int, dict[int, float]] = {}
+    for r in rows:
+        by_cid.setdefault(int(r[cid_col]), {})[int(r["idx"])] = r[val_col]
+    cids = sorted(by_cid)
+    return cids, np.array(
+        [[by_cid[c][i] for i in sorted(by_cid[c])] for c in cids],
+        dtype="float64",
+    )
+
+
+def _model_scan(df: DataFrame, vec_col: str, kernel, schema: str):
+    """The one model-scan primitive: mapInPandas over df with ONE numpy
+    pass per Arrow batch. Each batch's `vec_col` arrays stack into an
+    (n, d) float64 matrix and kernel(pdf, x_mat) returns the output
+    columns as a dict; empty batches yield nothing. The kernel closes
+    over the model constants and returns UNROUNDED fold results."""
+
+    def _scan(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf):
+                x_mat = np.stack(pdf[vec_col].to_numpy())
+                yield pd.DataFrame(kernel(pdf, x_mat))
+
+    return df.mapInPandas(_scan, schema)
 
 
 # --- ext_neardup_embedding --------------------------------------------------
@@ -308,6 +365,49 @@ LIMIT {_TOP_K}
 """
 
 
+def _probe_cells(pids, pmat, qv):
+    """Driver-side IVF probe selection: the _N_PROBE pivots nearest the
+    query by exact-fold cosine, in the oracle's (qcos DESC, pivot_id ASC)
+    probe order; returns their ids ascending."""
+    import numpy as np
+
+    qcos = _np_fold_cos_mat(pmat, qv[None, :])[:, 0]
+    order = sorted(range(len(pids)), key=lambda i: (-qcos[i], pids[i]))
+    return np.array(
+        sorted(int(pids[i]) for i in order[:_N_PROBE]), dtype="int64"
+    )
+
+
+def _nearest_cells(x_mat, pids, pmat):
+    """Each row's IVF cell id. argmax returns the FIRST max along the
+    pid-ascending axis — the oracle's min(pivot_id) tie-break."""
+    import numpy as np
+
+    return pids[np.argmax(_np_fold_cos_mat(x_mat, pmat), axis=1)]
+
+
+def _cosine_top_k(v: DataFrame, qv, keep) -> DataFrame:
+    """Exact-cosine top-_TOP_K against the query vector qv over the rows
+    keep(x_mat) selects, the query row (vec_id 0) excluded: one model-scan
+    pass, then TakeOrdered on (cos_sim DESC, vec_id ASC)."""
+    import numpy as np
+
+    def _kernel(pdf, x_mat):
+        ids = pdf["vec_id"].to_numpy()
+        mask = keep(x_mat) & (ids != 0)
+        xs = x_mat[mask]
+        return {
+            "vec_id": ids[mask],
+            "cos_sim": _fold_cos_rows(xs, np.broadcast_to(qv, xs.shape)),
+        }
+
+    return (
+        _model_scan(v, "v", _kernel, "vec_id bigint, cos_sim double")
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        .limit(_TOP_K)
+    )
+
+
 @query("ext_ann_ivf", oracle=_IVF_ORACLE, tier=3)
 def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate top-10 for the vec_id=0 query: assign every
@@ -341,54 +441,14 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = widen_scan(load(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", _as_double("embedding").alias("v"))
-    # model collect from the RAW scan (filter pushes down to parquet);
-    # collecting off the widened frame would pay a full-corpus repartition
-    # shuffle just to fetch 17 rows
-    head = {
-        int(r["vec_id"]): np.array(r["v"], dtype="float64")
-        for r in load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .filter(F.col("vec_id").between(0, _N_PIVOTS))
-        .collect()
-    }
+    head = _collect_vectors(spark, sf_dir, 0, _N_PIVOTS, required=[0])
     qv = head[0]
-    pids = np.array(sorted(k for k in head if k >= 1), dtype="int64")
-    pmat = np.stack([head[int(p)] for p in pids])
-    # driver-side probe selection: exact-fold pivot-vs-query cosines, same
-    # (qcos DESC, pivot_id ASC) order as the old probe_cells subplan
-    qcos = _np_fold_cos_mat(pmat, qv[None, :])[:, 0]
-    order = sorted(range(len(pids)), key=lambda i: (-qcos[i], pids[i]))
-    probe_ids = np.array(
-        sorted(int(pids[i]) for i in order[:_N_PROBE]), dtype="int64"
-    )
-
-    def _score(batches):
-        import pandas as pd
-
-        cols = {"vec_id": "int64", "cos_sim": "float64"}
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({c: [] for c in cols}).astype(cols)
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            x_mat = np.stack(pdf["v"].to_numpy())
-            cm = _np_fold_cos_mat(x_mat, pmat)
-            # argmax returns the FIRST max along the pid-ascending axis =
-            # the old struct(pcos, -pivot_id) max's lowest-pid tie-break
-            cells = pids[np.argmax(cm, axis=1)]
-            mask = np.isin(cells, probe_ids) & (ids != 0)
-            xs = x_mat[mask]
-            cos = (
-                _fold_cos_rows(xs, np.broadcast_to(qv, xs.shape))
-                if xs.shape[0]
-                else np.array([], dtype="float64")
-            )
-            yield pd.DataFrame({"vec_id": ids[mask], "cos_sim": cos})
-
-    return (
-        v.mapInPandas(_score, "vec_id bigint, cos_sim double")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOP_K)
+    pids, pmat = _stack_rows(head, 1, _N_PIVOTS)
+    probe_ids = _probe_cells(pids, pmat, qv)
+    return _cosine_top_k(
+        v,
+        qv,
+        lambda x_mat: np.isin(_nearest_cells(x_mat, pids, pmat), probe_ids),
     )
 
 
@@ -472,33 +532,15 @@ def _km_assign_arrow(v: DataFrame, cids: list, cmat) -> DataFrame:
     Python. Centroids enter by closure from a model-sized collect (k x
     dims doubles — the §3.2 driver-action budget); the corpus still never
     shuffles for assignment."""
-
-    def _dists(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "ve": [],
-                        "dists": [],
-                    }
-                )
-                continue
-            x_mat = np.stack(pdf["ve"].to_numpy())
-            dm = _np_fold_sqds(x_mat, cmat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "ve": pdf["ve"],
-                    "dists": list(dm),
-                }
-            )
-
-    out = v.mapInPandas(
-        _dists, "vec_id bigint, ve array<double>, dists array<double>"
+    out = _model_scan(
+        v,
+        "ve",
+        lambda pdf, x_mat: {
+            "vec_id": pdf["vec_id"].to_numpy(),
+            "ve": pdf["ve"],
+            "dists": list(_np_fold_sqds(x_mat, cmat)),
+        },
+        "vec_id bigint, ve array<double>, dists array<double>",
     )
     cid_arr = F.array(*[F.lit(int(c)).cast("bigint") for c in cids])
     best = F.array_min(
@@ -542,25 +584,13 @@ def ext_kmeans_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure — the returned plan is one scan -> ArrowEvalPython ->
     project, with iteration 1 executed during query construction (the
     bench and the driver time construction + collect together)."""
-    import numpy as np
-
     from ..session import widen_scan
 
     e = widen_scan(load(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", _as_double("embedding").alias("ve"))
-    # seed collect from the RAW scan (pushed-down filter) — the widened
-    # frame would shuffle the corpus to fetch 8 rows
-    seed_rows = {
-        int(r["vec_id"]): np.array(r["ve"], dtype="float64")
-        for r in load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("ve"))
-        .filter(F.col("vec_id").between(1, _KM_K))
-        .collect()
-    }
-    cids = sorted(seed_rows)
-    assigned = _km_assign_arrow(
-        v, cids, np.stack([seed_rows[c] for c in cids])
-    )
+    seeds = _collect_vectors(spark, sf_dir, 1, _KM_K)
+    cids, cmat = _stack_rows(seeds, 1, _KM_K)
+    assigned = _km_assign_arrow(v, cids, cmat)
     for _ in range(_KM_ITERS - 1):
         mean_rows = (
             assigned.select("cid", F.posexplode("ve").alias("idx", "val"))
@@ -573,19 +603,7 @@ def ext_kmeans_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # k x dims rows — model-sized (§3.2 budget)
         )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in mean_rows:
-            by_cid.setdefault(int(r["cid"]), {})[int(r["idx"])] = r[
-                "mean_val"
-            ]
-        cids = sorted(by_cid)
-        cmat = np.array(
-            [
-                [by_cid[c][i] for i in sorted(by_cid[c])]
-                for c in cids
-            ],
-            dtype="float64",
-        )
+        cids, cmat = _centroid_matrix(mean_rows, "cid", "mean_val")
         assigned = _km_assign_arrow(v, cids, cmat)
     return assigned.select(
         "vec_id", F.col("cid").cast("bigint").alias("cluster_id"), "sq_dist"
@@ -756,15 +774,7 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = widen_scan(load(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", _as_double("embedding").alias("v"))
-    # model collect from the RAW scan (pushed-down filter), never the
-    # widened frame — see the ext_ann_ivf note
-    head = {
-        int(r["vec_id"]): np.array(r["v"], dtype="float64")
-        for r in load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .filter(F.col("vec_id").between(0, _LSH_ANCHORS))
-        .collect()
-    }
+    head = _collect_vectors(spark, sf_dir, 0, _LSH_ANCHORS, required=[0])
     qv = head[0]
     # plane derivation replicates the old JVM frame arithmetic: anchor
     # pair (2j-1, 2j) of block t spans plane (t, j) with hv = av - bv
@@ -786,15 +796,15 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables.append((bits, h_mat))
 
     def _sigs(x_mat):
-        """(n, d) -> (n, n_tables) int64 signatures, exact-fold dots."""
-        out = []
-        for bits, h_mat in tables:
-            if h_mat.shape[0] == 0:
-                out.append(np.zeros(x_mat.shape[0], dtype="int64"))
-                continue
-            dots = _np_fold_dots(x_mat, h_mat)
-            out.append(((dots >= 0) * bits[None, :]).sum(axis=1))
-        return np.stack(out, axis=1)
+        """(n, d) -> (n, n_tables) int64 signatures, exact-fold dots (a
+        table without planes folds to an (n, 0) matrix: signature 0)."""
+        return np.stack(
+            [
+                ((_np_fold_dots(x_mat, h) >= 0) * bits[None, :]).sum(axis=1)
+                for bits, h in tables
+            ],
+            axis=1,
+        )
 
     # query signatures + multiprobe code set (Hamming radius 2 over the
     # fixed _LSH_BITS width — the old probe_exprs), all driver-side ints
@@ -811,34 +821,14 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         probe_sets.append(np.array(sorted(codes), dtype="int64"))
 
-    def _score(batches):
-        import pandas as pd
+    def _in_probed_buckets(x_mat):
+        sigs = _sigs(x_mat)
+        return np.any(
+            [np.isin(sigs[:, t], probe_sets[t]) for t in range(_LSH_TABLES)],
+            axis=0,
+        )
 
-        cols = {"vec_id": "int64", "cos_sim": "float64"}
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({c: [] for c in cols}).astype(cols)
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            x_mat = np.stack(pdf["v"].to_numpy())
-            sigs = _sigs(x_mat)
-            cand = np.zeros(len(ids), dtype=bool)
-            for t in range(_LSH_TABLES):
-                cand |= np.isin(sigs[:, t], probe_sets[t])
-            cand &= ids != 0
-            xs = x_mat[cand]
-            cos = (
-                _fold_cos_rows(xs, np.broadcast_to(qv, xs.shape))
-                if xs.shape[0]
-                else np.array([], dtype="float64")
-            )
-            yield pd.DataFrame({"vec_id": ids[cand], "cos_sim": cos})
-
-    return (
-        v.mapInPandas(_score, "vec_id bigint, cos_sim double")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOP_K)
-    )
+    return _cosine_top_k(v, qv, _in_probed_buckets)
 
 
 # --- ext_embedding_norm_filter ------------------------------------------------
@@ -1116,31 +1106,24 @@ _PQ_DISTS_SCHEMA_TAIL = ", ".join(
 )
 
 
-def _pq_collect_codebook(spark: SparkSession, sf_dir: str):
-    """Model-sized driver collect of codebook rows 1.._PQ_K, code-ascending
-    (k x d doubles, KBs at any corpus scale — the §3.2 budget). Reads the
-    RAW scan so the id filter pushes down to parquet — never a widened
-    frame, whose repartition would shuffle the corpus to fetch 16 rows."""
-    import numpy as np
+#: Codebook rows vec_id 1.._PQ_K, all required: _pq_codes_from_dists maps
+#: array index i to code i+1, so a missing row would silently shift every
+#: later code away from the oracle's (which keys codes by vec_id).
+_PQ_CODES = range(1, _PQ_K + 1)
 
-    rows = {
-        int(r["vec_id"]): np.array(r["v"], dtype="float64")
-        for r in load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .filter(F.col("vec_id").between(1, _PQ_K))
-        .collect()
+
+def _pq_dist_cols(x_mat, cmat):
+    """(n, d) -> {d0..d3: n rows of _PQ_K unrounded subspace distances},
+    exact-fold order per row/code (codes ascend within a row)."""
+    return {
+        f"d{m}": list(
+            _np_fold_sqds(
+                x_mat[:, m * _PQ_SUB : (m + 1) * _PQ_SUB],
+                cmat[:, m * _PQ_SUB : (m + 1) * _PQ_SUB],
+            )
+        )
+        for m in range(_PQ_M)
     }
-    return np.stack([rows[c] for c in sorted(rows)])
-
-
-def _pq_subspace_dists(x_mat, cmat):
-    """(n, d) -> dict of 4 (n, 16) unrounded subspace distance matrices,
-    exact-fold order per row/code (codes ascend along axis 1)."""
-    out = {}
-    for m in range(_PQ_M):
-        sl = slice(m * _PQ_SUB, (m + 1) * _PQ_SUB)
-        out[m] = _np_fold_sqds(x_mat[:, sl], cmat[:, sl])
-    return out
 
 
 def _pq_codes_from_dists(out: DataFrame, cols: list[str]) -> DataFrame:
@@ -1167,8 +1150,10 @@ def _pq_query_dist_arrays(qv, cmat):
     table's values before their JVM round): 4 lists of _PQ_K floats,
     code-ascending — exact folds, so F.round(lit, 9) at lookup time equals
     the old JVM-computed rounded table entry bit for bit."""
-    d = _pq_subspace_dists(qv[None, :], cmat)
-    return [[float(x) for x in d[m][0]] for m in range(_PQ_M)]
+    return [
+        [float(x) for x in rows[0]]
+        for rows in _pq_dist_cols(qv[None, :], cmat).values()
+    ]
 
 
 def _pq_adc_score_lit(qd):
@@ -1187,10 +1172,24 @@ def _pq_adc_score_lit(qd):
     return score
 
 
+def _pq_encode(v: DataFrame, cmat) -> DataFrame:
+    """vec_id + code_0..3 + recon_err for every (vec_id, v) row against the
+    code-ascending codebook matrix: one model scan for the unrounded
+    subspace distances, then the JVM rounded argmin."""
+    dists = _model_scan(
+        v,
+        "v",
+        lambda pdf, x_mat: {
+            "vec_id": pdf["vec_id"].to_numpy(),
+            **_pq_dist_cols(x_mat, cmat),
+        },
+        f"vec_id bigint, {_PQ_DISTS_SCHEMA_TAIL}",
+    )
+    return _pq_codes_from_dists(dists, ["vec_id"])
+
+
 @query("ext_pq_encode", oracle=_PQ_ORACLE, tier=3)
-def ext_pq_encode(
-    spark: SparkSession, sf_dir: str, _cmat=None
-) -> DataFrame:
+def ext_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding: each 64-dim vector becomes 4 codes
     (one 16-entry codebook per 16-dim subspace) plus its reconstruction
     error — the 64x-compressed representation IVFPQ-style ANN indexes
@@ -1222,36 +1221,8 @@ def ext_pq_encode(
 
     e = widen_scan(load(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", _as_double("embedding").alias("v"))
-    # _cmat lets a composing caller (ext_ann_pq_search) reuse its own
-    # model collect instead of paying a second driver job per invocation
-    cmat = _cmat if _cmat is not None else _pq_collect_codebook(spark, sf_dir)
-
-    def _dists(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        **{f"d{m}": [] for m in range(_PQ_M)},
-                    }
-                )
-                continue
-            x_mat = np.stack(pdf["v"].to_numpy())
-            d = _pq_subspace_dists(x_mat, cmat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    **{f"d{m}": list(d[m]) for m in range(_PQ_M)},
-                }
-            )
-
-    dists = v.mapInPandas(
-        _dists, f"vec_id bigint, {_PQ_DISTS_SCHEMA_TAIL}"
-    )
-    return _pq_codes_from_dists(dists, ["vec_id"])
+    head = _collect_vectors(spark, sf_dir, 1, _PQ_K, required=_PQ_CODES)
+    return _pq_encode(v, _stack_rows(head, 1, _PQ_K)[1])
 
 
 # --- ext_ann_pq_search --------------------------------------------------------
@@ -1425,22 +1396,21 @@ def ext_ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect (UNROUNDED exact folds) and enters the plan as four literal
     16-entry arrays whose lookups round in the JVM — value-for-value the
     old broadcast table, with its crossJoin/aggregate subplan gone."""
-    import numpy as np
+    from ..session import widen_scan
 
     e = load(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double("embedding").alias("v"))
     # ONE model-sized collect covers query + codebook (rows 0.._PQ_K)
-    head = {
-        int(r["vec_id"]): np.array(r["v"], dtype="float64")
-        for r in v.filter(F.col("vec_id").between(0, _PQ_K)).collect()
-    }
-    qv = head[0]
-    cmat = np.stack([head[c] for c in sorted(head) if c >= 1])
-    qd = _pq_query_dist_arrays(qv, cmat)
-
-    codes = ext_pq_encode(spark, sf_dir, _cmat=cmat).select(
-        "vec_id", "code_0", "code_1", "code_2", "code_3"
+    head = _collect_vectors(
+        spark, sf_dir, 0, _PQ_K, required=[0, *_PQ_CODES]
     )
+    cmat = _stack_rows(head, 1, _PQ_K)[1]
+    qd = _pq_query_dist_arrays(head[0], cmat)
+
+    wide = widen_scan(load(spark, sf_dir, "embeddings"))
+    codes = _pq_encode(
+        wide.select("vec_id", _as_double("embedding").alias("v")), cmat
+    ).select("vec_id", "code_0", "code_1", "code_2", "code_3")
     topk = (
         codes.filter(F.col("vec_id") != 0)
         .select("vec_id", _pq_adc_score_lit(qd).alias("approx_dist"))
@@ -1619,63 +1589,29 @@ def ext_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = widen_scan(load(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", _as_double("embedding").alias("v"))
-    # model collect from the RAW scan (pushed-down filter) — see the
-    # ext_ann_ivf note
-    head = {
-        int(r["vec_id"]): np.array(r["v"], dtype="float64")
-        for r in load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .filter(F.col("vec_id").between(0, max(_N_PIVOTS, _PQ_K)))
-        .collect()
-    }
+    head = _collect_vectors(
+        spark, sf_dir, 0, max(_N_PIVOTS, _PQ_K), required=[0, *_PQ_CODES]
+    )
     qv = head[0]
-    pids = np.array(
-        sorted(k for k in head if 1 <= k <= _N_PIVOTS), dtype="int64"
-    )
-    pmat = np.stack([head[int(p)] for p in pids])
-    cmat = np.stack(
-        [head[c] for c in sorted(head) if 1 <= c <= _PQ_K]
-    )
-    # driver-side probe selection — exact-fold pivot-vs-query cosines,
-    # same (qcos DESC, pivot_id ASC) order as the old probe_cells subplan
-    qcos = _np_fold_cos_mat(pmat, qv[None, :])[:, 0]
-    order = sorted(range(len(pids)), key=lambda i: (-qcos[i], pids[i]))
-    probe_ids = np.array(
-        sorted(int(pids[i]) for i in order[:_N_PROBE]), dtype="int64"
-    )
+    pids, pmat = _stack_rows(head, 1, _N_PIVOTS)
+    cmat = _stack_rows(head, 1, _PQ_K)[1]
+    probe_ids = _probe_cells(pids, pmat, qv)
     qd = _pq_query_dist_arrays(qv, cmat)
 
-    def _fused(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "cell_id": pd.Series([], dtype="int64"),
-                        **{f"d{m}": [] for m in range(_PQ_M)},
-                    }
-                )
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            x_mat = np.stack(pdf["v"].to_numpy())
-            cm = _np_fold_cos_mat(x_mat, pmat)
-            # argmax = first max along the pid-ascending axis = the old
-            # struct(pcos, -pivot_id) max's lowest-pid tie-break
-            cells = pids[np.argmax(cm, axis=1)]
-            mask = np.isin(cells, probe_ids) & (ids != 0)
-            d = _pq_subspace_dists(x_mat[mask], cmat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids[mask],
-                    "cell_id": cells[mask],
-                    **{f"d{m}": list(d[m]) for m in range(_PQ_M)},
-                }
-            )
+    def _fused(pdf, x_mat):
+        ids = pdf["vec_id"].to_numpy()
+        cells = _nearest_cells(x_mat, pids, pmat)
+        mask = np.isin(cells, probe_ids) & (ids != 0)
+        return {
+            "vec_id": ids[mask],
+            "cell_id": cells[mask],
+            **_pq_dist_cols(x_mat[mask], cmat),
+        }
 
     cand = _pq_codes_from_dists(
-        v.mapInPandas(
+        _model_scan(
+            v,
+            "v",
             _fused,
             f"vec_id bigint, cell_id bigint, {_PQ_DISTS_SCHEMA_TAIL}",
         ),

@@ -20,7 +20,13 @@ from pyspark.sql import functions as F
 from ..plans.registry import query
 from ..session import scoped_persist
 from ..tables import load
-from .ann import _as_double, _sq_dist
+from .ann import (
+    _as_double,
+    _centroid_matrix,
+    _model_scan,
+    _np_fold_sqds,
+    _sq_dist,
+)
 
 # --- ext_kcenter_coreset -------------------------------------------------------
 
@@ -477,9 +483,7 @@ def ext_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle of the expanded frame: a_dist is element_at(own cluster),
     b_dist is array_min over the others, both on the same row."""
     from ..functions.determinism import davg
-    from .ann import _as_double, _np_fold_sqds, ext_kmeans_lite
-
-    import numpy as np
+    from .ann import ext_kmeans_lite
 
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("ve")
@@ -495,40 +499,16 @@ def ext_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(davg("val", "m", 9))
         .collect()  # k x dims rows — model-sized
     )
-    by_cid: dict[int, dict[int, float]] = {}
-    for r in md_rows:
-        by_cid.setdefault(int(r["cluster_id"]), {})[int(r["idx"])] = r["m"]
-    cids = sorted(by_cid)
-    cmat = np.array(
-        [[by_cid[c][i] for i in sorted(by_cid[c])] for c in cids],
-        dtype="float64",
-    )
-
-    def _dists(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "cluster_id": pd.Series([], dtype="int64"),
-                        "dists": [],
-                    }
-                )
-                continue
-            x_mat = np.stack(pdf["ve"].to_numpy())
-            dm = _np_fold_sqds(x_mat, cmat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cluster_id": pdf["cluster_id"].to_numpy(),
-                    "dists": list(dm),
-                }
-            )
-
-    pp = a.select("vec_id", "cluster_id", "ve").mapInPandas(
-        _dists, "vec_id bigint, cluster_id bigint, dists array<double>"
+    cids, cmat = _centroid_matrix(md_rows, "cluster_id", "m")
+    pp = _model_scan(
+        a.select("vec_id", "cluster_id", "ve"),
+        "ve",
+        lambda pdf, x_mat: {
+            "vec_id": pdf["vec_id"].to_numpy(),
+            "cluster_id": pdf["cluster_id"].to_numpy(),
+            "dists": list(_np_fold_sqds(x_mat, cmat)),
+        },
+        "vec_id bigint, cluster_id bigint, dists array<double>",
     )
     cid_arr = F.array(*[F.lit(int(c)).cast("bigint") for c in cids])
     rounded = F.transform("dists", lambda d: F.round(d, 9))

@@ -530,11 +530,11 @@ def ext_hits_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE free to pick the strategy (incl. broadcast conversion) from
     # runtime sizes at any scale.
     h1 = scoped_persist(
-        edges.join(F.broadcast(a1), "part")
+        edges.join(a1, "part")
         .groupBy("cust")
         .agg(F.sum("s").alias("s"))
     )
-    a2 = edges.join(F.broadcast(h1), "cust").groupBy("part").agg(
+    a2 = edges.join(h1, "cust").groupBy("part").agg(
         F.sum("s").alias("s")
     )
     ta = a2.agg(F.sum("s").alias("t"))

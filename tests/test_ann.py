@@ -3,8 +3,14 @@ rows-only oracle can't express)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from billing_data_loader_spark.operators import ann
 from billing_data_loader_spark.operators.ann import ext_ann_ivf
 from billing_data_loader_spark.operators.llm_pipeline import ext_knn_cosine
 from billing_data_loader_spark.operators.text_analysis import (
@@ -13,8 +19,9 @@ from billing_data_loader_spark.operators.text_analysis import (
 from billing_data_loader_spark.operators.llm_pipeline import (
     _corpus_with_dups,
 )
+from billing_data_loader_spark.tables import TABLE_NAMES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SF_SMOKE
 
 
 def test_ann_ivf_recall_vs_exact(spark):
@@ -143,3 +150,51 @@ def test_residual_pq_cells_match_ivf_assignment(spark):
             key=lambda p: (cos(v, emb[p]), -p),
         )
         assert r["cell_id"] == want, (r["vec_id"], r["cell_id"], want)
+
+
+#: (operator, dropped vec_id) pairs whose model collect REQUIRES that row:
+#: query row 0 for every query-driven search, codebook rows 1..16 for the
+#: PQ family. IVF pivots and LSH anchors are not required — a missing one
+#: drops that pivot/plane on both engines alike, as in the oracle.
+_MISSING_MODEL_ROW_CASES = [
+    ("ext_ann_ivf", 0),
+    ("ext_ann_lsh", 0),
+    ("ext_ann_pq_search", 0),
+    ("ext_ann_ivfpq", 0),
+    ("ext_ann_pq_search", 5),
+    ("ext_ann_ivfpq", 5),
+    ("ext_pq_encode", 5),
+]
+
+
+@pytest.fixture(scope="module")
+def embeddings_without(tmp_path_factory):
+    """{dropped vec_id: fixture dir} — the sf0.001 embeddings minus one
+    row, every other table symlinked from sf0.001."""
+    src = pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet"))
+    dirs = {}
+    for dropped in sorted({d for _, d in _MISSING_MODEL_ROW_CASES}):
+        out = tmp_path_factory.mktemp(f"embeddings_without_{dropped}")
+        pq.write_table(
+            src.filter(pc.not_equal(src["vec_id"], dropped)),
+            out / "embeddings.parquet",
+        )
+        for t in TABLE_NAMES:
+            if t != "embeddings":
+                os.symlink(
+                    os.path.join(SF_SMOKE, f"{t}.parquet"),
+                    out / f"{t}.parquet",
+                )
+        dirs[dropped] = str(out)
+    return dirs
+
+
+@pytest.mark.parametrize("key,dropped", _MISSING_MODEL_ROW_CASES)
+def test_missing_model_row_raises_named_error(
+    spark, embeddings_without, key, dropped
+):
+    """A missing required model row fails query construction with a
+    ValueError naming the id — not a bare KeyError, and never (for a
+    codebook row) silently shifted codes."""
+    with pytest.raises(ValueError, match=rf"vec_id \[{dropped}\]"):
+        getattr(ann, key)(spark, embeddings_without[dropped])

@@ -12,12 +12,11 @@ genuine trough number, not the min of three polluted runs.
 Usage:
     python tools/quiet_measure.py [--sf DIR] [--runs N] [--gate G]
                                   [--plans SUBDIR --suffix before|after]
-                                  [--inclusive] key1 key2 ...
+                                  key1 key2 ...
 
---inclusive starts the timer BEFORE fn(spark, sf) — the exact region
-bench.py and the grading driver time. Required for keys whose fn performs
-model-sized driver actions (closure-captured centroids/pivots for Arrow
-UDFs): timing only the collect would hide that work.
+The timer starts BEFORE fn(spark, sf) — the exact region bench.py and the
+grading driver time — so keys whose fn performs model-sized driver actions
+(closure-captured centroids/pivots for Arrow UDFs) are timed with that work.
 """
 
 from __future__ import annotations
@@ -80,9 +79,6 @@ def main() -> None:
         i = args.index("--suffix")
         suffix = args[i + 1]
         del args[i : i + 2]
-    inclusive = "--inclusive" in args
-    if inclusive:
-        args.remove("--inclusive")
 
     spark = get_spark("bdl-quiet-measure")
     specs = catalog()
@@ -103,13 +99,8 @@ def main() -> None:
             _wait_quiet(gate)
             spark.sparkContext.setJobDescription(f"quiet_measure:{key}#{r}")
             r += 1
-            if inclusive:
-                t0 = time.perf_counter()
-                specs[key].fn(spark, sf).toPandas()
-            else:
-                df = specs[key].fn(spark, sf)
-                t0 = time.perf_counter()
-                df.toPandas()
+            t0 = time.perf_counter()
+            specs[key].fn(spark, sf).toPandas()
             dt = time.perf_counter() - t0
             spark.catalog.clearCache()
             end_load = os.getloadavg()[0]
