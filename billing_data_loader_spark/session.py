@@ -4,12 +4,14 @@ The driver hands us its own SparkSession (``__spark_entry__.entry`` /
 ``queries()``), so every config we *require* for oracle parity must be
 runtime-settable and applied in :func:`prep`, not only at builder time.
 
-Scale notes (100 TB design intent, tested on local[32]):
+Scale notes (100 TB design intent):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   broadcast-join conversion are the main levers that keep the same logical
   plans healthy on a 1000-executor cluster.
-- ``spark.sql.shuffle.partitions`` here is sized for the local fixtures; on a
-  real cluster AQE's coalescing makes the initial number mostly a ceiling.
+- ``spark.sql.shuffle.partitions`` is the session's task slots, set in
+  :func:`prep`: AQE coalesces shuffle reads below it, but not a scan of a
+  ``scoped_persist``-ed frame, which keeps the width it was cached at. On a
+  cluster it grows with the executor cores, so it is no ceiling.
 - Session timezone pinned to UTC: the DuckDB oracle compares timestamps
   UTC-naive (FIXTURES.md integrity notes).
 """
@@ -31,8 +33,8 @@ def conf_override(spark: SparkSession, confs: dict[str, str]):
 
     The grading driver (and any long-lived pipeline) reuses ONE session for
     every query; a sink that sets e.g. partitionOverwriteMode and never
-    restores it bleeds config into every subsequent query. Mirrors the
-    save/restore discipline streaming/jobs.py applies to shuffle.partitions.
+    restores it bleeds config into every subsequent query. The streaming
+    jobs scope their state-store widths through it.
     """
     saved: dict[str, str | None] = {}
     for key, value in confs.items():
@@ -57,7 +59,6 @@ _RUNTIME_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
 }
 
 
@@ -110,7 +111,7 @@ def widen_scan(df):
 
     Everything fused into a scan stage runs at the scan's task count, and a
     small parquet file is one row-group = ONE task — so a 5k-doc fixture
-    serializes the whole tokenize+hash pipeline on 1 of 32 cores, and no
+    serializes the whole tokenize+hash pipeline on one task slot, and no
     downstream exchange can recover the lost wall-clock. One round-robin
     shuffle of the raw rows (KBs here) unlocks every core. No-op when the
     scan is already wide — at real scale a 100 TB table has thousands of
@@ -193,12 +194,17 @@ def prep(spark: SparkSession) -> SparkSession:
 
     Memoized per session object: tables.load calls this on EVERY table
     read, and each conf.set is a py4j round-trip — ~20-100 ms per query
-    of pure dispatch across a 166-key run. The applied values are
-    constants, so once a session is prepped there is nothing to re-apply
-    (conf_override and the streaming jobs restore what they change)."""
+    of pure dispatch across a 166-key run. The applied values are fixed
+    for the session's life, so once a session is prepped there is nothing
+    to re-apply (conf_override restores what it changes). The shuffle
+    width is set here alone, to the task slots :func:`widen_scan` also
+    fans out to (see the module notes)."""
     if getattr(spark, "_bdl_prepped", False):
         return spark
-    for key, value in _RUNTIME_CONF.items():
+    width = str(spark.sparkContext.defaultParallelism)
+    for key, value in {
+        **_RUNTIME_CONF, "spark.sql.shuffle.partitions": width
+    }.items():
         try:
             spark.conf.set(key, value)
         except Exception:
@@ -229,7 +235,6 @@ def get_spark(app_name: str = "billing-data-loader-spark") -> SparkSession:
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("BDL_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # STATIC conf (builder-only): the generated-class cache defaults to

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.determinism import MICRO, dsum, o_dsum, quantize_long
 from ..plans.registry import query
+from ..session import conf_override
 from ..tables import (
     events_finalize_ts,
     events_read_schema,
@@ -210,13 +211,14 @@ def _run_to_memory(
 
     State partitioning is sized to the stream, not the batch default: each
     state partition costs a delta+commit file per micro-batch (a stream-
-    stream join keeps FOUR stores per partition per side), so 32
-    partitions for a replay this size is pure checkpoint I/O. On a real
-    cluster this knob (fixed at first checkpoint) is sized to peak key
-    cardinality instead — override BDL_STREAM_STATE_PARTITIONS. Local
-    default 8 -> 4 (r13): same-session A/B on the two stream-stream join
-    keys measured ~0.5-0.7x wall-clock at 4 (and again at 2) — the
-    fixture's state is KBs, so commit-file count dominates.
+    stream join keeps FOUR stores per partition per side), so the batch
+    width (one per task slot) is pure checkpoint I/O for a replay this
+    size. On a real cluster this knob (fixed at first checkpoint) is sized
+    to peak key cardinality instead — override
+    BDL_STREAM_STATE_PARTITIONS. Local default 8 -> 4 (r13): same-session
+    A/B on the two stream-stream join keys measured ~0.5-0.7x wall-clock
+    at 4 (and again at 2) — the fixture's state is KBs, so commit-file
+    count dominates.
 
     State-store provider (VERDICT r13 item 9): BDL_STREAM_STATE_PROVIDER
     = "rocksdb" switches to RocksDBStateStoreProvider, env-gated with the
@@ -228,21 +230,17 @@ def _run_to_memory(
     cost dominate) RocksDB is the documented switch, one env var away."""
     spark = stream_df.sparkSession
     ckpt = tempfile.mkdtemp(prefix=f"bdl_ckpt_{name}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    if os.environ.get("BDL_STREAM_STATE_PROVIDER", "").lower() == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+    confs = {
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "BDL_STREAM_STATE_PARTITIONS", "4"
         )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("BDL_STREAM_STATE_PARTITIONS", "4"),
-    )
-    try:
+    }
+    if os.environ.get("BDL_STREAM_STATE_PROVIDER", "").lower() == "rocksdb":
+        confs["spark.sql.streaming.stateStore.providerClass"] = (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    with conf_override(spark, confs):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -252,17 +250,6 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_provider is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                prev_provider,
-            )
     return spark.table(name)
 
 
@@ -715,8 +702,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared semantics and the oracle bind identically; on a protobuf-
     equipped cluster the TWS branch is the one that runs."""
     ev = _read_stream_events(spark, sf_dir).select("user_id", "value")
-    from ..session import conf_override
-
     if tws_available():
         with conf_override(
             spark,
@@ -825,19 +810,17 @@ def _ensure_state_coordinator(spark: SparkSession, sf_dir: str) -> None:
         return
     warm = _read_stream_events(spark, sf_dir).groupBy().count()
     ckpt = tempfile.mkdtemp(prefix="bdl_ss_coord_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
-        q = (
-            warm.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_override(spark, {"spark.sql.shuffle.partitions": "1"}):
+            q = (
+                warm.writeStream.format("noop")
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         # pure warm-up plumbing: unlike the staged state checkpoint this
         # dir has no reuse value — drop it or we leak one per session
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -859,9 +842,9 @@ def _state_store_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             F.count(F.lit(1)).alias("n_events"),
             F.sum(quantize_long("value", 2)).alias("sum_cents"),
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        # a fixed 8, not the host's width: the staged checkpoint is keyed
+        # on the fixture alone, so every host must build the same one
+        with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
             q = (
                 agg.writeStream.format("noop")
                 .outputMode("complete")
@@ -870,8 +853,6 @@ def _state_store_checkpoint(spark: SparkSession, sf_dir: str) -> str:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark._bdl_state_coordinator_ready = True
 
     return content_addressed_stage(

@@ -5,7 +5,7 @@ The whole oracle-parity strategy rests on two claims:
 1. decimal-quantized float reductions are reduction-order-insensitive and
    bit-identical between Spark and DuckDB (functions/determinism.py);
 2. declared results do not depend on the session's shuffle width (what
-   changes between local[32] and a 1000-executor cluster).
+   changes between a local session and a 1000-executor cluster).
 Both are asserted here on adversarial inputs, not just the fixtures.
 """
 
@@ -24,7 +24,7 @@ from billing_data_loader_spark.functions.determinism import (
 )
 from billing_data_loader_spark.oracle import check_query
 from billing_data_loader_spark.plans.catalog import catalog
-from billing_data_loader_spark.session import conf_override
+from billing_data_loader_spark.session import conf_override, prep
 
 from .conftest import SF_DIR
 
@@ -178,19 +178,46 @@ _WIDTH_KEYS = [
     "ext_epoch_shuffle",
     "ext_pq_train",
     "ext_dup_ngram_bloom",
+    # the width sets the partitions of a persisted frame (AQE cannot
+    # coalesce a cache scan) and the range-bucket count of a global rank
+    "ext_containment_neardup",
+    "win_ntile_pctrank",
 ]
+
+
+def _off_width(spark) -> str:
+    """A shuffle width other than the session's: 7, or 5 on a 7-slot host."""
+    return "5" if spark.conf.get("spark.sql.shuffle.partitions") == "7" else "7"
 
 
 @pytest.mark.parametrize("key", _WIDTH_KEYS)
 def test_result_independent_of_shuffle_width(spark, key):
-    """The declared result must not depend on parallelism: re-run under
-    spark.sql.shuffle.partitions=7 (co-prime to 32, so every hash
-    assignment changes) and the oracle hash must still match — the local
-    stand-in for 'same answer on a 1000-executor cluster'."""
+    """The declared result must not depend on parallelism: re-run under a
+    shuffle width other than the session's (which follows the host's task
+    slots), so hash assignments change, and the oracle hash must still
+    match — the local stand-in for 'same answer on a 1000-executor
+    cluster'."""
     spec = catalog()[key]
-    with conf_override(spark, {"spark.sql.shuffle.partitions": "7"}):
+    width = _off_width(spark)
+    with conf_override(spark, {"spark.sql.shuffle.partitions": width}):
         ok, msg = check_query(spec.fn(spark, SF_DIR), spec.oracle, SF_DIR)
-    assert ok, f"{key} under width 7: {msg}"
+    assert ok, f"{key} under width {width}: {msg}"
+
+
+def test_shuffle_width_is_task_slots(spark):
+    """prep sets the shuffle width to the session's task slots, on our own
+    session and on one whose width was set to something else first (the
+    driver hands us a session we did not build)."""
+    key = "spark.sql.shuffle.partitions"
+    want = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(key) == want
+    with conf_override(spark, {key: _off_width(spark)}):
+        spark._bdl_prepped = False
+        try:
+            prep(spark)
+            assert spark.conf.get(key) == want
+        finally:
+            spark._bdl_prepped = True
 
 
 @given(
