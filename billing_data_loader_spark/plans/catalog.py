@@ -1,17 +1,15 @@
 """Imports every operator module so their ``@query`` registrations run.
 
 ``__spark_entry__.py`` imports this module and reads the registry.
+:func:`catalog` returns the keys in registration order: module by module in
+``_MODULES`` order, and within a module in definition order.
 Add new operator modules to ``_MODULES`` as they come online.
 """
 
 from __future__ import annotations
 
-import json
-import re
 from importlib import import_module
-from pathlib import Path
 
-from .impl_hash import stale_keys
 from .registry import QuerySpec, all_queries
 
 _MODULES = [
@@ -56,127 +54,6 @@ _MODULES = [
 for _m in _MODULES:
     import_module(_m)
 
-# The grading driver walks ``queries()`` in dict-insertion order and graded
-# exactly the first 50 keys in round 1 (CORRECTNESS_r01.json), leaving 38
-# declared keys without any correctness row. Emit the catalog in an explicit
-# priority order so the driver's window covers the keys that still need a
-# green row on record. The STATIC list below encodes round 2's hand-rotation;
-# on top of it, ``catalog()`` auto-rotates from the CORRECTNESS_r*.json
-# files actually on disk: any key with a recorded green (or rows-only) row
-# in ANY past round drops behind keys still waiting for their first record,
-# so future rounds need no manual reordering.
-_GRADING_PRIORITY = [
-    # round-1 red (fixed this round)
-    "agg_collect_sorted", "cast_types", "fn_math_suite", "fn_array_suite",
-    "fn_map_struct",
-    # never graded in round 1
-    "udf_pandas_scalar", "udf_grouped_map", "udf_pandas_agg",
-    "udtf_tokenize_ordinal", "ext_dedup_hash", "ext_knn_cosine",
-    "ext_knn_per_label", "ext_text_stats", "ext_tfidf",
-    "ext_neardup_jaccard", "ext_neardup_minhash_lsh", "ext_multimodal_schema",
-    "ext_lang_id", "ext_quality_score", "ext_token_count",
-    "ext_doc_fingerprint", "ext_neardup_simhash", "ext_pii_scrub",
-    "ext_repetition_score", "ext_sample_stratified", "ext_lm_unigram_score",
-    "ext_neardup_embedding", "ext_ann_ivf", "ext_multimodal_decode",
-    "ext_frame_sample", "scan_csv_schema", "scan_jsonl", "scan_orc",
-    "sink_parquet_partitioned", "sink_idempotent_overwrite",
-    "sink_clickhouse", "stream_tumbling_1h", "stream_sliding",
-    "stream_session_window", "stream_availablenow_replay",
-    "stream_watermark_late", "stream_stateful_custom",
-    "stream_dedup_watermark",
-    # added round 2 (no record yet; inside the 50-key window)
-    "dedup_keep_latest", "join_q10_returns", "join_q18_big_orders",
-    "win_sessionize", "agg_pivot", "fn_unpivot",
-    # graded in round 1 (back of the queue): 44 green keys, plus
-    # agg_approx_distinct whose rows-only record (no_oracle by design)
-    # is already on file
-    "agg_approx_distinct",
-    "agg_q1_pricing", "agg_count_distinct", "agg_conditional", "agg_having",
-    "agg_rollup", "agg_cube", "agg_grouping_sets", "agg_percentiles",
-    "agg_stats", "scan_parquet", "project_compute", "filter_compound",
-    "null_handling", "dedup_exact_rows", "join_inner_hash",
-    "join_broadcast_dim", "join_q3_shipping", "join_star_5way",
-    "join_left_outer", "join_semi", "join_anti", "join_theta_band",
-    "join_interval", "join_cross_small", "join_asof_events",
-    "win_topk_per_group", "win_rank_dense", "win_lag_lead",
-    "win_running_sum", "win_moving_avg_range", "win_ntile_pctrank",
-    "win_first_last", "sort_limit_topk", "sort_nulls_order",
-    "set_union_all", "set_union_distinct", "set_intersect", "set_except",
-    "fn_string_suite", "fn_date_suite", "fn_conditional",
-    "fn_explode_tokens", "fn_json_extract", "udf_python_scalar",
-    # added late in round 2, deliberately BEHIND the grading window so they
-    # don't evict keys still waiting for their first green row; rotate
-    # forward in round 3
-    "join_skew_salted", "ext_ngram_freq", "stream_join_static",
-    "ext_dedup_cluster",
-]
-
-
-#: Keys added mid-round-13 AFTER the grading window was frozen sorted
-#: last for ONE round so they would not evict the r6 re-grade cohort
-#: (VERDICT r12 #4). Emptied at the r14 start as planned (VERDICT r13
-#: #2): the 38 formerly deferred keys are now ordinary unrecorded
-#: tier-1 entries and rotate to the FRONT of the driver's 50-key
-#: correctness window, so the 5 of them the r13 optimizer modified
-#: (bill_cohort_arpu, ext_cross_source_overlap, prof_spearman_corr,
-#: ext_label_noise_knn, ext_mrr_eval) finally get driver-oracle-graded.
-_DEFER_BEHIND_WINDOW: frozenset[str] = frozenset()
-
-
-def _scan_records() -> tuple[dict[str, int], dict[str, int]]:
-    """(hash-green key -> latest round, rows-only key -> latest round)
-    across all CORRECTNESS files on disk."""
-    green: dict[str, int] = {}
-    rows_only: dict[str, int] = {}
-    repo_root = Path(__file__).resolve().parents[2]
-    for path in sorted(repo_root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.name)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                green[key] = max(rnd, green.get(key, 0))
-            elif row.get("err") == "no_oracle" and row.get("spark_rows"):
-                rows_only[key] = max(rnd, rows_only.get(key, 0))
-    return green, rows_only
-
 
 def catalog() -> dict[str, QuerySpec]:
-    registered = all_queries()
-    # stable base order: static priority list, then any brand-new key
-    base = [k for k in _GRADING_PRIORITY if k in registered]
-    base += [k for k in registered if k not in set(base)]
-    # Auto-rotation, three tiers inside the driver's 50-key window:
-    #   1. keys with no valid driver record at all (never graded, or their
-    #      rows-only record predates an oracle being attached);
-    #   2. keys whose implementation/oracle changed since their record was
-    #      earned (plans/impl_hash.py sidecar comparison) — the record
-    #      vouches for code that no longer ships, so re-grade;
-    #   3. recorded keys, ordered stalest-grade-first so the r1 cohort
-    #      cycles back through the window over successive rounds.
-    green, rows_only = _scan_records()
-    recorded: dict[str, int] = dict(green)
-    for k, rnd in rows_only.items():
-        if k in registered and registered[k].oracle is None:
-            recorded[k] = max(rnd, recorded.get(k, 0))
-    stale = stale_keys(registered) & set(recorded)
-    deferred = [
-        k
-        for k in base
-        if k in _DEFER_BEHIND_WINDOW and k not in recorded
-    ]
-    unrecorded = [
-        k for k in base if k not in recorded and k not in set(deferred)
-    ]
-    changed = [k for k in base if k in stale]
-    fresh = [k for k in base if k in recorded and k not in stale]
-    fresh.sort(key=lambda k: recorded[k])  # stable: ties keep base order
-    ordered = unrecorded + changed + fresh + deferred
-    return {k: registered[k] for k in ordered}
+    return all_queries()

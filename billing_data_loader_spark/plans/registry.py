@@ -41,7 +41,7 @@ def query(key: str, oracle: str | None = None, tier: int = 1):
             # release the previous query's scoped persist()s: a declared
             # query's caches live until the NEXT declared query starts,
             # so the driver can still collect the returned frame but
-            # caches never accumulate across the 88-query grading loop
+            # caches never accumulate across a run over the whole catalog
             release_scoped_caches()
             # guard against external conf drift on the driver's long-lived
             # session: prep() is memoized per session object, so parity-

@@ -7,6 +7,7 @@ import pytest
 
 from billing_data_loader_spark.oracle import check_query
 from billing_data_loader_spark.plans.catalog import catalog
+from billing_data_loader_spark.plans.registry import all_queries
 
 from .conftest import SF_DIR
 
@@ -33,3 +34,5 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+    # the driver walks queries() in registration order, nothing reorders it
+    assert list(e.queries()) == list(all_queries())
