@@ -417,10 +417,9 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest ANN trade-off; tests/test_ann.py pins the floor) but fully
     DETERMINISTIC, so the oracle replays the identical index-build +
     probe + search in SQL and the declared top-10 is hash-checked
-    (upgraded from rows-only in round 5). widen_scan: the 16-pivot argmin
-    is map-side ON the scan stage by design (zero exchanges), which also
-    means it runs at the scan's task count — one row-group = one core
-    without the widen (see session.widen_scan).
+    (upgraded from rows-only in round 5). The scan feeds the model scan
+    directly: its numpy kernel does milliseconds of work, so a widening
+    shuffle in front (session.widen_scan) costs more than it unlocks.
 
     100 TB shape: pivots broadcast (KB); assignment is a map-side argmin —
     the corpus shuffles ONCE on cell_id and is then bucketed for every
@@ -434,12 +433,10 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     §3.2 driver-action budget), which also lets the probe-cell top-8 be
     decided driver-side with the same exact fold and tie order — the old
     probe subplan, its broadcast build, and the assignment crossJoin all
-    disappear: the returned plan is scan -> ArrowEvalPython -> TakeOrdered."""
+    disappear: the returned plan is scan -> MapInPandas -> TakeOrdered."""
     import numpy as np
 
-    from ..session import widen_scan
-
-    e = widen_scan(load(spark, sf_dir, "embeddings"))
+    e = load(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double("embedding").alias("v"))
     head = _collect_vectors(spark, sf_dir, 0, _N_PIVOTS, required=[0])
     qv = head[0]
@@ -744,13 +741,10 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, and the one that degrades gracefully under inserts (a new
     vector's code never changes; IVF cells drift with the pivot set).
 
-    Shape: the 18 plane vectors fold to ONE broadcast row; signatures
-    are a map-side integer fold per table computed inside the scan stage
-    (no shuffle, order-insensitive integer sum so collect_list order
-    cannot perturb them); the probe set is O(tables x bits^2) codes
-    broadcast back; candidate ids dedup through one id-only shuffle
-    (vectors never move until the final fetch-join). At 100 TB the
-    corpus shuffles ONCE on (table, sig) into a bucketed index; a query
+    Shape: the scan feeds one model scan directly, with no shuffle in
+    front (a widening shuffle costs more than the kernel's milliseconds
+    of numpy; see session.widen_scan). At 100 TB the corpus shuffles
+    ONCE on (table, sig) into a bucketed index; a query
     touches only its probe buckets. The fixture's 6-bit/64-bucket codes
     are sized to its 500-2000 vectors — at real scale bits grow with
     log(corpus) and probing narrows, shrinking the scanned fraction; the
@@ -767,12 +761,10 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     code set, the candidate test AND the exact re-rank cosine all happen
     inside the same map pass — the old persisted signature frame, its
     probe broadcast join, and the candidate fetch-join all disappear: the
-    returned plan is scan -> ArrowEvalPython -> TakeOrdered."""
+    returned plan is scan -> MapInPandas -> TakeOrdered."""
     import numpy as np
 
-    from ..session import widen_scan
-
-    e = widen_scan(load(spark, sf_dir, "embeddings"))
+    e = load(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double("embedding").alias("v"))
     head = _collect_vectors(spark, sf_dir, 0, _LSH_ANCHORS, required=[0])
     qv = head[0]

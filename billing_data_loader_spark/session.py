@@ -14,10 +14,24 @@ Scale notes (100 TB design intent):
   cluster it grows with the executor cores, so it is no ceiling.
 - Session timezone pinned to UTC: the DuckDB oracle compares timestamps
   UTC-naive (FIXTURES.md integrity notes).
+
+Python workers: :func:`get_spark` starts them through
+:mod:`.worker_daemon` (``spark.python.daemon.module``), PySpark's daemon
+with one change. Stock workers call ``importlib.invalidate_caches()`` on
+every task, and on CPython 3.11 that re-reads the directory of every
+cached zip importer (pyspark.zip and the spark-core jar): 0.13-0.21 s of
+every task on a 4-vCPU host, against 2-6 ms of numpy in an ANN model
+scan. The daemon invalidates only when a task added a ``sys.path`` entry.
+It imports this package from the package zip, which ``get_spark`` puts on
+the workers' ``PYTHONPATH``. A session that ``get_spark`` did not build
+(one handed to ``__spark_entry__``) keeps PySpark's stock workers;
+answers are the same, only each Python task pays the re-read.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import tempfile
 import zipfile
@@ -62,17 +76,27 @@ _RUNTIME_CONF = {
 }
 
 
+@functools.cache
 def _package_zip() -> str:
     """Zip this package so Spark Python workers can import it regardless of
     the driver process's cwd (UDF/mapInPandas closures reference
     module-level helpers, which pickle BY REFERENCE and are re-imported in
-    the worker). On a real cluster this is exactly `--py-files`."""
+    the worker). On a real cluster this is exactly `--py-files`.
+
+    Written once per process and removed when the interpreter exits: it
+    is the worker daemon's import path for the session's whole life."""
     pkg_root = Path(__file__).resolve().parent
-    out = Path(tempfile.gettempdir()) / f"bdl_pkg_{os.getpid()}.zip"
-    if not out.exists():
-        with zipfile.ZipFile(out, "w") as zf:
-            for py in sorted(pkg_root.rglob("*.py")):
-                zf.write(py, f"{pkg_root.name}/{py.relative_to(pkg_root)}")
+    pid = os.getpid()
+    out = Path(tempfile.gettempdir()) / f"bdl_pkg_{pid}.zip"
+    with zipfile.ZipFile(out, "w") as zf:
+        for py in sorted(pkg_root.rglob("*.py")):
+            zf.write(py, f"{pkg_root.name}/{py.relative_to(pkg_root)}")
+
+    def _remove() -> None:
+        if os.getpid() == pid:  # not in a forked child that exits normally
+            out.unlink(missing_ok=True)
+
+    atexit.register(_remove)
     return str(out)
 
 
@@ -107,7 +131,7 @@ def release_scoped_caches() -> None:
 
 def widen_scan(df):
     """Fan a narrow scan out to the session's parallelism BEFORE CPU-heavy
-    per-row work (shingling, n-gram hashing, per-char folds, vector math).
+    per-row work (shingling, n-gram hashing, per-char folds).
 
     Everything fused into a scan stage runs at the scan's task count, and a
     small parquet file is one row-group = ONE task — so a 5k-doc fixture
@@ -118,15 +142,19 @@ def widen_scan(df):
     row-groups, so this never fires there; it is the same
     runtime-statistics adaptation as AQE, aimed at the opposite corner
     (too FEW partitions before the first exchange, which AQE cannot see).
-    ``getNumPartitions`` converts the plan but launches no job."""
+    ``getNumPartitions`` converts the plan but launches no job.
+
+    Not for a numpy model scan (``operators/ann.py:_model_scan``): its
+    kernel does milliseconds of work per batch, so the shuffle's extra
+    stage and Python tasks cost more than the cores it unlocks."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
-#: One Python worker runs per task slot (32 on local[32]); a BLAS that also
-#: fans out N threads per worker oversubscribes the box ~32x and turns the
+#: One Python worker runs per task slot; a BLAS that also fans out N
+#: threads per worker oversubscribes the box by the slot count and turns the
 #: Pandas-UDF operators (embedding tiles, grouped maps) into lock convoys
 #: with wildly bimodal latency. Pin library-internal pools to 1 thread —
 #: parallelism comes from Spark's partitioning, not from nested BLAS.
@@ -237,6 +265,13 @@ def get_spark(app_name: str = "billing-data-loader-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers: the package's daemon (module notes), importing
+        # the package from the zip (a local master: a path on this host)
+        .config(
+            "spark.python.daemon.module",
+            "billing_data_loader_spark.worker_daemon",
+        )
+        .config("spark.executorEnv.PYTHONPATH", _package_zip())
         # STATIC conf (builder-only): the generated-class cache defaults to
         # 100 entries, and a 166-query workload cycles hundreds of distinct
         # codegen stages through it — every re-run of a query then

@@ -240,16 +240,21 @@ def _run_to_memory(
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
         )
-    with conf_override(spark, confs):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    try:
+        with conf_override(spark, confs):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        # the answer is in the memory sink once the replay has ended;
+        # the checkpoint has no reuse value, so drop it (one per run)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -572,13 +577,17 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ckpt = tempfile.mkdtemp(prefix="bdl_ckpt_foreachbatch_")
-    q = (
-        ev.writeStream.foreachBatch(_load_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            ev.writeStream.foreachBatch(_load_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # the batches have landed in `out`; the checkpoint is not reused
+        shutil.rmtree(ckpt, ignore_errors=True)
     landed = spark.read.parquet(out)
     return landed.groupBy(
         F.col("event_day").cast("bigint").alias("event_day")

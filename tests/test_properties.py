@@ -7,6 +7,9 @@ The whole oracle-parity strategy rests on two claims:
 2. declared results do not depend on the session's shuffle width (what
    changes between a local session and a 1000-executor cluster).
 Both are asserted here on adversarial inputs, not just the fixtures.
+The Python-worker boot that get_spark sets up (session.py) is pinned here
+too: the package daemon runs in every task slot, and files added with
+addPyFile still import in warm workers.
 """
 
 from __future__ import annotations
@@ -218,6 +221,73 @@ def test_shuffle_width_is_task_slots(spark):
             assert spark.conf.get(key) == want
         finally:
             spark._bdl_prepped = True
+
+
+def _in_workers(spark, fn, n_parts) -> list[str]:
+    """str(fn()) from a Python worker, one task per partition."""
+
+    def _run(batches):
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"out": [str(fn())]})
+
+    df = spark.range(0, n_parts, 1, n_parts).mapInPandas(_run, "out string")
+    return [r.out for r in df.collect()]
+
+
+def test_workers_boot_through_package_daemon(spark):
+    """get_spark's workers run the package daemon's per-task set-up (the
+    one that skips the import-cache re-read), in every task slot."""
+
+    def _setup_module():
+        import pyspark.worker
+
+        return pyspark.worker.setup_spark_files.__module__
+
+    n = spark.sparkContext.defaultParallelism
+    assert _in_workers(spark, _setup_module, n) == [
+        "billing_data_loader_spark.worker_daemon"
+    ] * n
+
+
+def test_added_py_files_import_in_warm_workers(spark, tmp_path):
+    """What per-task import-cache invalidation protects: a .py file added
+    after the workers are warm is importable by the next task. The file
+    lands in the Spark files directory, which is already on sys.path, so
+    the task adds no path entry; the directory's mtime is set back to the
+    value the workers cached, as a coarse file-system clock would leave
+    it, so only an invalidation lets the import see the file."""
+    import os
+    import uuid
+
+    from pyspark import SparkFiles
+
+    def _refresh():
+        import importlib.util
+
+        return importlib.util.find_spec("bdl_addpy_absent")
+
+    n = spark.sparkContext.defaultParallelism
+    root = SparkFiles.getRootDirectory()
+    stem = f"bdl_addpy_{uuid.uuid4().hex}"
+    for i in range(3):
+        _in_workers(spark, _refresh, n)  # every worker caches root's listing
+        before = os.stat(root)
+        path = tmp_path / f"{stem}_{i}.py"
+        path.write_text(f"VALUE = {i}\n")
+        spark.sparkContext.addPyFile(str(path))
+        spark.range(1).count()  # the executor fetches the file into root
+        assert os.path.exists(os.path.join(root, path.name))
+        os.utime(root, ns=(before.st_atime_ns, before.st_mtime_ns))
+
+        def _import(name=path.stem):
+            import importlib
+
+            return importlib.import_module(name).VALUE
+
+        assert _in_workers(spark, _import, n) == [str(i)] * n
 
 
 @given(

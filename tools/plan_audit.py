@@ -123,13 +123,6 @@ AUDITED = {
         "broadcast for the share — the fact table never hash-shuffles on "
         "the key."
     ),
-    "ext_ann_lsh": (
-        "LSH-bucketed ANN (round 7): 18 plane vectors fold to one "
-        "broadcast row; per-table sign-bit signatures are an integer fold "
-        "inside the scan stage; probe codes broadcast back; only candidate "
-        "IDs shuffle (distinct), vectors move only in the final fetch-join "
-        "before TakeOrderedAndProject."
-    ),
     "ext_chunk_sliding": (
         "Sliding-window chunking (round 8): ZERO exchanges — chunk "
         "membership is an integer expression, chunks come from "
@@ -488,7 +481,6 @@ EXPECTED_FLAGS: dict[str, dict[str, str]] = {
         # standard way to compute a corpus-wide constant without collect()
         "ext_tfidf": "1-row global n_docs aggregate for the IDF term",
         "ext_lm_unigram_score": "1-row global token-total aggregate",
-        "ext_ann_ivf": "1-row pivot-array fold (16 pivots -> one array row)",
         "ext_zorder_layout": (
             "1-row global min/max extents aggregate (bin scaling constants)"
         ),
@@ -591,7 +583,6 @@ EXPECTED_FLAGS: dict[str, dict[str, str]] = {
         "ext_dedup_semantic_rep": "inherits ext_kmeans_lite centroid fold",
         "agg_heavy_hitters_approx": "1-row global event-count aggregate",
         "prof_skew_report": "1-row (n_keys, n_rows) profile aggregate",
-        "ext_ann_lsh": "1-row plane-array fold (18 planes -> one array row)",
         "ext_domain_mix_temperature": (
             "1-row quantized-weight total + O(n_domains)-row "
             "largest-remainder rank window (one row per language)"
@@ -843,7 +834,6 @@ EXPECTED_FLAGS: dict[str, dict[str, str]] = {
         "join_theta_band": "theta component; equi key keeps the hash join",
         "ext_knn_cosine": "1-row broadcast query vector",
         "ext_knn_per_label": "1-row broadcast query vector",
-        "ext_ann_ivf": "1-row pivot array + 1-row query vector",
         "ext_neardup_embedding": "broadcast block-pair task table",
         "agg_approx_distinct": "self-check scalar join",
         "ext_tfidf": "1-row broadcast n_docs frame (IDF denominator)",
@@ -910,7 +900,6 @@ EXPECTED_FLAGS: dict[str, dict[str, str]] = {
         "ext_dedup_semantic_rep": "inherits ext_kmeans_lite centroid array",
         "agg_heavy_hitters_approx": "1-row broadcast event-count frame (share)",
         "prof_skew_report": "1-row broadcast (n_keys, n_rows) frame (ratio)",
-        "ext_ann_lsh": "1-row plane array + 1-row query vector broadcasts",
         "ext_domain_mix_temperature": (
             "1-row broadcast weight-total + 1-row shortfall frames"
         ),
